@@ -1,6 +1,6 @@
 package htmlspark.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
@@ -13,6 +13,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * count + url-range watermark. Every Iceberg-specific call in the engine
   * routes through this one file.
   *
+  * The manifest's row count and url range come from the write itself: an
+  * Observation on the written Dataset collects them in the write's own
+  * job, as an Iceberg writer reports its data-file stats, so a commit runs
+  * no read-back of the snapshot. Reads use ExtractedDoc's declared schema,
+  * so neither a commit nor a resume starts a schema-inference job.
+  *
   * Resume = LEFT ANTI join of incoming urls against committed urls — the
   * reference's "snapshot + reload" lifecycle (Core/TreeBuilder.Snapshot.cs)
   * lifted from parser state to job state.
@@ -24,22 +30,24 @@ object IcebergishIO {
 
   /** Append `docs` as a new snapshot under `tableDir`; returns snapshot id. */
   def commit(docs: Dataset[ExtractedDoc], tableDir: String): Long = {
-    val spark = docs.sparkSession
     val prev = lastSnapshotId(tableDir)
     val snapId = prev + 1
     val dataDir = s"$tableDir/data/snap-$snapId"
-    docs.write.mode(SaveMode.Overwrite).parquet(dataDir)
-    val stats = spark.read.parquet(dataDir)
-      .agg(count(lit(1)), min("url"), max("url")).collect()(0)
+    val written = Observation()
+    docs.observe(written, count(lit(1)).as("n_rows"),
+        min("url").as("min_url"), max("url").as("max_url"))
+      .write.mode(SaveMode.Overwrite).parquet(dataDir)
+    val stats = written.get
+    def url(k: String): String = q(Option(stats(k)).fold("")(_.toString))
     val files = new java.io.File(dataDir).listFiles()
       .filter(f => f.getName.endsWith(".parquet")).map(_.getName).sorted
     Files.createDirectories(Paths.get(s"$tableDir/snapshots"))
     val json =
       s"""{"snapshot_id": $snapId, "parent_id": ${if (prev == 0) "null" else prev},
          | "data_dir": ${q(s"data/snap-$snapId")},
-         | "n_rows": ${stats.getLong(0)},
-         | "min_url": ${q(Option(stats.getString(1)).getOrElse(""))},
-         | "max_url": ${q(Option(stats.getString(2)).getOrElse(""))},
+         | "n_rows": ${stats("n_rows")},
+         | "min_url": ${url("min_url")},
+         | "max_url": ${url("max_url")},
          | "files": [${files.map(q).mkString(", ")}]}""".stripMargin
     Files.write(Paths.get(s"$tableDir/snapshots/snap-$snapId.json"),
       json.getBytes("UTF-8"),
@@ -56,13 +64,18 @@ object IcebergishIO {
       .foldLeft(0L)(math.max)
   }
 
-  /** All rows committed across snapshots. */
+  /** The schema every snapshot is written with. */
+  private lazy val committedSchema = Encoders.product[ExtractedDoc].schema
+
+  /** All rows committed across snapshots, read with the declared
+    * ExtractedDoc schema (no footer read to infer it). */
   def readCommitted(spark: SparkSession, tableDir: String): Option[DataFrame] = {
     val last = lastSnapshotId(tableDir)
     if (last == 0) return None
     val dirs = (1L to last).map(i => s"$tableDir/data/snap-$i")
       .filter(d => new java.io.File(d).isDirectory)
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
+    if (dirs.isEmpty) None
+    else Some(spark.read.schema(committedSchema).parquet(dirs: _*))
   }
 
   /** Checkpoint/resume: drop pages whose url is already committed.

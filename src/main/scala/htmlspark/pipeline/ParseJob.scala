@@ -52,11 +52,12 @@ final case class PartitionMetrics(
     min_url: String,
     max_url: String)
 
-/** The extraction pipeline: pages → (dedup latest) → skew-salted
-  * repartition → per-row parse via typed Dataset map → extracted docs (+
-  * per-partition metrics). The parse is a pure Array[Byte] ⇒ ExtractedDoc
-  * function; everything around it stays declarative so Catalyst owns scan
-  * pruning and the dedup window plan.
+/** The extraction pipeline: pages → parse in the scan (docs up to
+  * BigDocBytes) → latest-crawl dedup on one url-hash exchange, which also
+  * spreads the raw oversized docs → parse of the surviving oversized docs →
+  * extracted docs (+ per-partition metrics). The parse is a pure
+  * Array[Byte] ⇒ ExtractedDoc function; everything around it stays
+  * declarative so Catalyst owns scan pruning and the dedup window plan.
   */
 object ParseJob {
 
@@ -208,27 +209,6 @@ object ParseJob {
     singletons.union(dedupedDups)
   }
 
-  /** Fallback for when the dup-url set outgrows broadcast (possible at
-    * 10^12 rows with a hostile crawl): same two-join shape with shuffle
-    * joins. The anti/semi joins shuffle (url, payload) once; with a
-    * bucketed-by-url table layout (IcebergishIO writes bucketed in prod)
-    * both joins co-locate and the shuffle disappears entirely. */
-  def dedupLatestNoBroadcast(pages: Dataset[Page]): Dataset[Page] = {
-    import pages.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val dupUrls = pages.groupBy($"url")
-      .agg(count(lit(1)).as("n"))
-      .filter($"n" > 1)
-      .select($"url")
-    val singletons = pages.join(dupUrls, Seq("url"), "left_anti").as[Page]
-    val w = Window.partitionBy($"url")
-      .orderBy($"warc_ts".desc, xxhash64($"html").desc)
-    val dedupedDups = pages.join(dupUrls, Seq("url"), "left_semi")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1).drop("rn").as[Page]
-    singletons.union(dedupedDups)
-  }
-
   /** The original full-shuffle variant, kept for A/B in benchmarks. */
   def dedupLatestWindowAll(pages: Dataset[Page]): Dataset[Page] = {
     import pages.sparkSession.implicits._
@@ -239,14 +219,21 @@ object ParseJob {
       .filter($"rn" === 1).drop("rn").as[Page]
   }
 
+  /** Html size above which a doc counts as oversized: its parse costs
+    * enough CPU to be worth spreading over tasks instead of parsing it
+    * where the scan put it. */
+  private[pipeline] val BigDocBytes = 65536
+
   /** Salt-count default: scale-adaptive (r6, guide §2.5) — 2× the
     * session's default parallelism instead of a constant tuned for
     * local[32]: on a 1000-core cluster a fixed 32 salts × 3 size buckets
     * caps the oversized-doc leg at 96 tasks no matter how many oversized
     * docs there are; deriving from the cluster keeps the skew leg's
-    * key-space ahead of its task count everywhere. Floor of 32 keeps the
-    * local bench exactly as before (local[32] → 64 ≥ 32). Routing-only:
-    * salts change which partition a row lands in, never the row set. */
+    * key-space ahead of its task count everywhere. local[32] therefore
+    * uses 64 salts; the floor of 32 only guards sessions with little
+    * parallelism (local[1] → 32, not 2).
+    * Routing-only: salts change which partition a row lands in, never the
+    * row set. */
   private def defaultSalts(pages: Dataset[Page]): Int =
     math.max(pages.sparkSession.sparkContext.defaultParallelism * 2, 32)
 
@@ -255,9 +242,13 @@ object ParseJob {
     * a 2 KB doc in the SAME byte-balanced partition). Route rows by
     * (size_bucket, salt) so pathological docs spread across tasks.
     * `salts <= 0` → scale-adaptive default (defaultSalts).
+    *
+    * Serves only the paths with no url exchange of their own to ride:
+    * runParseFirstStats (p05) and the `rescan` strategy. runParseFirst
+    * spreads its oversized docs through the dedup exchange instead.
     */
   def saltBySize(pages: Dataset[Page], salts0: Int = -1,
-                 threshold: Int = 65536): Dataset[Page] = {
+                 threshold: Int = BigDocBytes): Dataset[Page] = {
     import pages.sparkSession.implicits._
     val salts = if (salts0 > 0) salts0 else defaultSalts(pages)
     // Only the skew classes pay the shuffle: ordinary docs (≤ threshold
@@ -301,7 +292,7 @@ object ParseJob {
       .withColumn("size_bucket",
         when(octet_length($"html") > 1000000, 3)
           .when(octet_length($"html") > 262144, 2)
-          .when(octet_length($"html") > 65536, 1)
+          .when(octet_length($"html") > BigDocBytes, 1)
           .otherwise(0))
       .withColumn("salt", pmod(xxhash64($"url"), lit(salts)))
       .repartition(col("size_bucket"), col("salt"))
@@ -309,9 +300,9 @@ object ParseJob {
       .as[Page]
   }
 
-  /** Full pipeline: dedup → salt → parse.
-    *
-    * Two physical strategies for the same logical plan:
+  /** Full pipeline: latest crawl per url, parsed. The default
+    * `parse-first` strategy is runParseFirst (one url exchange); the two
+    * dedup → salt → parse strategies remain for comparison:
     *  - `rescan = true`: shuffle-frugal (dedupLatest + saltBySize) — the
     *    source is scanned up to 5×, but only ~1% of payload bytes ever
     *    shuffle. Right when the source is a columnar table on a cluster:
@@ -344,33 +335,48 @@ object ParseJob {
       html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
       html.length, 42L)
 
-  /** Default strategy: parse BEFORE the dedup shuffle.
+  /** Default strategy: parse ordinary docs BEFORE the dedup shuffle, and
+    * let that one url-hash exchange spread the oversized ones.
     *
-    * The html payload (~2.5 KB/doc) never shuffles for ordinary docs: the
-    * scan→parse stages fuse into one narrow pipeline (selective salting
-    * still spreads oversized docs first), and latest-crawl dedup runs on
-    * the *extracted* rows (~0.5 KB) — a 5-6× smaller shuffle. Parsing the
-    * ~1% stale duplicate crawls costs ~1% extra CPU, far cheaper than
-    * shuffling 100% of raw bytes. Output is identical: the parse is pure,
-    * so picking the latest row before or after parsing commutes. */
+    * One scan stage parses every doc of at most BigDocBytes in place, so
+    * its html payload (~2.5 KB/doc) never shuffles: latest-crawl dedup runs
+    * on the *extracted* row (~0.5 KB), a 5-6× smaller shuffle. Parsing the
+    * ~1% stale duplicate crawls among them costs ~1% extra CPU, far cheaper
+    * than shuffling 100% of raw bytes. An oversized doc passes the scan
+    * raw; the dedup exchange hashes it by url, which spreads oversized
+    * docs over tasks as the url salt of saltBySize does, and it is parsed
+    * after the rank-1 window, so a stale oversized crawl is dropped
+    * unparsed. Output is identical either way: the parse is pure, so
+    * picking the latest row before or after parsing commutes.
+    *
+    * Plan: scan → parse-or-pass → exchange(url) → sort → window → filter →
+    * parse the passed survivors; two stages, one exchange. */
   def runParseFirst(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
     import pages.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     // Tiebreak on xxhash64(html) — the SAME value the dedup-first
-    // strategies order by — computed in the parse kernel (tieOf) and
-    // carried through it, so all strategies pick the same survivor under
-    // (url, warc_ts) ties (hashing text_extracted here would also leave
-    // markup-only differences unresolved: identical text,
-    // nondeterministic survivor).
-    val parsed = saltBySize(pages).mapPartitions { it =>
+    // strategies order by — computed in the scan (tieOf) next to the
+    // parse, so all strategies pick the same survivor under (url, warc_ts)
+    // ties (hashing text_extracted here would also leave markup-only
+    // differences unresolved: identical text, nondeterministic survivor).
+    // Exactly one of (doc, raw) is set per row.
+    val scanned = pages.mapPartitions { it =>
       val engine = new HtmlParser.Engine
-      it.map(p => (parsePage(p, engine), tieOf(p.html)))
-    }.toDF("doc", "tie")
-    val w = Window.partitionBy($"doc.url")
-      .orderBy($"doc.warc_ts".desc, $"tie".desc)
-    parsed.withColumn("rn", row_number().over(w))
+      it.map { p =>
+        val tie = tieOf(p.html)
+        if (p.html != null && p.html.length > BigDocBytes)
+          (p.url, p.warc_ts, tie, null: ExtractedDoc, p)
+        else (p.url, p.warc_ts, tie, parsePage(p, engine), null: Page)
+      }
+    }.toDF("url", "warc_ts", "tie", "doc", "raw")
+    val w = Window.partitionBy($"url").orderBy($"warc_ts".desc, $"tie".desc)
+    scanned.withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
-      .select($"doc.*").as[ExtractedDoc]
+      .select($"doc", $"raw").as[(ExtractedDoc, Page)]
+      .mapPartitions { it =>
+        lazy val engine = new HtmlParser.Engine
+        it.map { case (doc, raw) => if (doc != null) doc else parsePage(raw, engine) }
+      }
   }
 
   /** Narrow-shuffle survivor-stats variant of runParseFirst (r6, guide

@@ -124,6 +124,61 @@ class PipelineSpec extends AnyFunSuite {
     assert(parseFirst == shuffle)
   }
 
+  test("parse-first keeps the latest crawl when duplicate crawls mix " +
+       "ordinary and oversized docs (parsed-in-scan and parsed-after-dedup " +
+       "paths)") {
+    import spark.implicits._
+    // an oversized doc whose text names its crawl, just past the threshold
+    def big(tag: String): Array[Byte] = {
+      val sb = new StringBuilder("<!doctype html><html><head><title>")
+        .append(tag).append("</title></head><body>\n")
+      var k = 0
+      while (sb.length <= ParseJob.BigDocBytes + 1024) {
+        sb.append(s"<p>$tag paragraph $k</p>\n"); k += 1
+      }
+      sb.append("</body></html>").toString.getBytes("UTF-8")
+    }
+    def small(i: Long): Array[Byte] = PagesGen.renderHtml(i)
+    val t0 = new java.sql.Timestamp(1704067200000L)
+    val t1 = new java.sql.Timestamp(1704067200000L + 86400000L)
+    def page(u: String, ts: java.sql.Timestamp, html: Array[Byte]) =
+      Page(u, ts, html, "", "en")
+    val mixed = Seq(
+      // latest crawl oversized, stale one ordinary
+      page("https://mixed.example/a", t0, small(1)),
+      page("https://mixed.example/a", t1, big("a-latest")),
+      // latest crawl ordinary, stale one oversized
+      page("https://mixed.example/b", t0, big("b-stale")),
+      page("https://mixed.example/b", t1, small(2)),
+      // three oversized crawls tied on (url, warc_ts)
+      page("https://mixed.example/c", t0, big("c-1")),
+      page("https://mixed.example/c", t0, big("c-2")),
+      page("https://mixed.example/c", t0, big("c-3")),
+      // an ordinary and an oversized crawl tied on (url, warc_ts)
+      page("https://mixed.example/d", t0, small(3)),
+      page("https://mixed.example/d", t0, big("d")),
+      page(null, t0, small(4)))
+    assert(mixed.exists(_.html.length > ParseJob.BigDocBytes) &&
+      mixed.exists(_.html.length <= ParseJob.BigDocBytes))
+    val background = (0L until 100L).map(PagesGen.page)
+    val input = mixed ++ background
+    val expected = input.groupBy(p => Option(p.url)).map { case (u, ps) =>
+      u -> ParseJob.parsePage(
+        ps.maxBy(p => (p.warc_ts.getTime, ParseJob.tieOf(p.html))))
+        .copy(parse_us = 0L)
+    }
+    val actual = ParseJob.run(spark.createDataset(input).repartition(3))
+      .collect().map(d => Option(d.url) -> d.copy(parse_us = 0L))
+    assert(actual.length == expected.size, "one row per url, null url included")
+    actual.foreach { case (u, d) =>
+      assert(d == expected(u), s"survivor differs for $u")
+    }
+    // both parse paths produced survivors
+    assert(actual.exists(_._2.n_bytes > ParseJob.BigDocBytes))
+    assert(actual.exists(a => a._1.exists(_.startsWith("https://mixed.")) &&
+      a._2.n_bytes <= ParseJob.BigDocBytes))
+  }
+
   test("p08 flagship oracle faces agree: parsed plain-article md5/len == " +
        "template-derived expected (the driver's DuckDB compare shape)") {
     val dir = "/root/testdata/sf0.001"
