@@ -35,6 +35,7 @@ object BenchExtra {
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
+      // A rep whose query throws prints FAIL, never its elapsed time.
       val times = (1 to reps).map { _ =>
         if (mode == "fresh") htmlspark.pipeline.TextOps.clearPlanCache(spark)
         val t0 = System.nanoTime()
@@ -43,12 +44,13 @@ object BenchExtra {
           if (mode == "noop")
             df.write.format("noop").mode("overwrite").save()
           else df.count()
+          f"${(System.nanoTime() - t0) / 1e9}%.3f"
         } catch { case e: Throwable =>
-          System.err.println(s"$name FAILED: $e") }
-        (System.nanoTime() - t0) / 1e9
+          System.err.println(s"$name FAILED: $e")
+          "FAIL"
+        }
       }
-      println(f"XTIMING $name mode=$mode " +
-        times.map(t => f"$t%.3f").mkString(" "))
+      println(s"XTIMING $name mode=$mode " + times.mkString(" "))
     }
     htmlspark.pipeline.TextOps.clearPlanCache(spark)
     spark.stop()

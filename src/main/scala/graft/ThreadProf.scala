@@ -4,7 +4,7 @@ import htmlspark.tree.HtmlParser
 
 /** Plain-thread engine harness: isolates engine-level scaling from Spark
   * overheads. One reusable parser Engine per thread, mirroring the
-  * per-partition reuse in ParseJob.parseAll. */
+  * per-pool-thread reuse in ParsePool. */
 object ThreadProf {
   def main(args: Array[String]): Unit = {
     val nt = args(0).toInt

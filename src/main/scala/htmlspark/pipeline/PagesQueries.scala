@@ -13,7 +13,10 @@ object PagesQueries {
   /** Scale the corpus with the sf dir via the events row count. Memoized
     * per (session, dir) — every sampled p-face calls this (often twice:
     * once for the sample size, once inside parsedSample), and each call
-    * was a full count job (r6; ~10 redundant jobs per bench run). */
+    * was a full count job (r6; ~10 redundant jobs per bench run).
+    * The memo is not invalidated when the file changes: a live session
+    * that regenerates `events.parquet` must call TextOps.clearPlanCache
+    * afterwards, or nPages keeps returning the old count. */
   def nPages(spark: SparkSession, dir: String): Long =
     PlanCache.getOrComputeLong(spark, s"npages:$dir") {
       spark.read.parquet(s"$dir/events.parquet").count()

@@ -1,11 +1,12 @@
 package htmlspark.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import htmlspark.encoding.EncodingSniffer
 import htmlspark.extract.TextExtractor
 import htmlspark.tree.HtmlParser
 import java.sql.Timestamp
+import scala.util.control.NonFatal
 
 /** Flat, Catalyst-friendly output row of the extraction pipeline
   * (SURVEY.md §1.2). */
@@ -52,19 +53,23 @@ final case class PartitionMetrics(
     min_url: String,
     max_url: String)
 
-/** The extraction pipeline: pages → parse in the scan (docs up to
-  * BigDocBytes) → latest-crawl dedup on one url-hash exchange, which also
-  * spreads the raw oversized docs → parse of the surviving oversized docs →
-  * extracted docs (+ per-partition metrics). The parse is a pure
-  * Array[Byte] ⇒ ExtractedDoc function; everything around it stays
-  * declarative so Catalyst owns scan pruning and the dedup window plan.
+/** The extraction pipeline: pages → parse of every doc in the scan, on
+  * the executor's morsel-driven ParsePool → latest-crawl dedup on one
+  * url-hash exchange of extracted rows → extracted docs (+ per-partition
+  * metrics). The parse is a pure Array[Byte] ⇒ ExtractedDoc function and
+  * every path runs it through one loop (parseWith); everything around it
+  * stays declarative so Catalyst owns scan pruning and the dedup window
+  * plan.
   */
 object ParseJob {
 
   /** Pure per-row parse: sniff → decode → tokenize+tree-build → extract.
     * Bounded single restart when a meta-declared charset contradicts the
     * default (reference suspends mid-parse instead:
-    * Core/Tokenizer.cs:2056-2059). Total: any byte soup yields a row. */
+    * Core/Tokenizer.cs:2056-2059). Total: any byte soup yields a row; only
+    * a fatal JVM error (out of memory, a linkage error) escapes, so it
+    * fails the task and Spark retries it instead of writing a false
+    * "parse failed" row. A StackOverflowError is a per-document failure. */
   def parsePage(p: Page): ExtractedDoc = parsePage(p, new HtmlParser.Engine)
 
   def parsePage(p: Page, engine: HtmlParser.Engine): ExtractedDoc = {
@@ -108,7 +113,7 @@ object ParseJob {
         error = null,
         parse_us = (System.nanoTime() - t0) / 1000)
     } catch {
-      case e: Throwable =>
+      case e @ (NonFatal(_) | _: StackOverflowError) =>
         ExtractedDoc(p.url, p.warc_ts, p.lang, "", "", "", bytes.length, 0, 0,
           0, Nil, "", restarted = false, late_meta = false, parse_ok = false,
           error = s"${e.getClass.getSimpleName}: ${e.getMessage}",
@@ -221,7 +226,9 @@ object ParseJob {
 
   /** Html size above which a doc counts as oversized: its parse costs
     * enough CPU to be worth spreading over tasks instead of parsing it
-    * where the scan put it. */
+    * where the scan put it. Also the morsel size of ParsePool: a morsel
+    * holds at most this much html, and an oversized doc is a morsel of its
+    * own. */
   private[pipeline] val BigDocBytes = 65536
 
   /** Salt-count default: scale-adaptive (r6, guide §2.5) — 2× the
@@ -243,9 +250,9 @@ object ParseJob {
     * (size_bucket, salt) so pathological docs spread across tasks.
     * `salts <= 0` → scale-adaptive default (defaultSalts).
     *
-    * Serves only the paths with no url exchange of their own to ride:
-    * runParseFirstStats (p05) and the `rescan` strategy. runParseFirst
-    * spreads its oversized docs through the dedup exchange instead.
+    * Serves only runParseFirstStats (p05) and the `rescan` strategy;
+    * ParsePool already spreads oversized docs over the executor's cores,
+    * so runParseFirst needs no salt.
     */
   def saltBySize(pages: Dataset[Page], salts0: Int = -1,
                  threshold: Int = BigDocBytes): Dataset[Page] = {
@@ -269,16 +276,19 @@ object ParseJob {
     small.union(big)
   }
 
-  /** The parse stage: typed Dataset map with ONE parser engine per
-    * partition — tokenizer/builder buffers grow to the largest doc in the
-    * partition once, then every row parses allocation-lean (the DOM and
-    * output strings are the only per-row garbage). */
+  /** The parse loop of every path: `f` on every page, on the executor's
+    * ParsePool (one Engine per pool thread, whose tokenizer buffers grow to
+    * the largest doc that thread has seen, so every row parses
+    * allocation-lean), rows out in input order. `f` is a parameter so a
+    * spec can inject one. */
+  private[pipeline] def parseWith[B: Encoder](pages: Dataset[Page])(
+      f: (Page, HtmlParser.Engine) => B): Dataset[B] =
+    pages.mapPartitions(it => ParsePool.map(it)(f))
+
+  /** The parse stage: every page to its extracted row (parseWith). */
   def parseAll(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
     import pages.sparkSession.implicits._
-    pages.mapPartitions { it =>
-      val engine = new HtmlParser.Engine
-      it.map(p => parsePage(p, engine))
-    }
+    parseWith(pages)((p, engine) => parsePage(p, engine))
   }
 
   /** Single-lineage variant of the salt: every row rides ONE hash
@@ -335,48 +345,35 @@ object ParseJob {
       html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
       html.length, 42L)
 
-  /** Default strategy: parse ordinary docs BEFORE the dedup shuffle, and
-    * let that one url-hash exchange spread the oversized ones.
+  /** Default strategy: parse every doc BEFORE the dedup shuffle.
     *
-    * One scan stage parses every doc of at most BigDocBytes in place, so
-    * its html payload (~2.5 KB/doc) never shuffles: latest-crawl dedup runs
-    * on the *extracted* row (~0.5 KB), a 5-6× smaller shuffle. Parsing the
-    * ~1% stale duplicate crawls among them costs ~1% extra CPU, far cheaper
-    * than shuffling 100% of raw bytes. An oversized doc passes the scan
-    * raw; the dedup exchange hashes it by url, which spreads oversized
-    * docs over tasks as the url salt of saltBySize does, and it is parsed
-    * after the rank-1 window, so a stale oversized crawl is dropped
-    * unparsed. Output is identical either way: the parse is pure, so
-    * picking the latest row before or after parsing commutes.
+    * The scan stage parses every doc on the executor's ParsePool, so no
+    * html payload ever shuffles: latest-crawl dedup runs on the
+    * *extracted* row, and the exchange carries extracted rows only. The
+    * pool, not the url hash, decides which core parses an oversized doc,
+    * so one task drawing several of them does not set the stage time.
+    * Parsing the ~1% stale duplicate crawls costs ~1% extra CPU (stale
+    * oversized crawls included), far cheaper than shuffling raw bytes.
+    * Output is identical either way: the parse is pure, so picking the
+    * latest row before or after parsing commutes.
     *
-    * Plan: scan → parse-or-pass → exchange(url) → sort → window → filter →
-    * parse the passed survivors; two stages, one exchange. */
+    * Plan: scan → pooled parse of every doc → exchange(url) → sort →
+    * rank-1 window → doc.*; two stages, one exchange. */
   def runParseFirst(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
     import pages.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     // Tiebreak on xxhash64(html) — the SAME value the dedup-first
-    // strategies order by — computed in the scan (tieOf) next to the
-    // parse, so all strategies pick the same survivor under (url, warc_ts)
-    // ties (hashing text_extracted here would also leave markup-only
-    // differences unresolved: identical text, nondeterministic survivor).
-    // Exactly one of (doc, raw) is set per row.
-    val scanned = pages.mapPartitions { it =>
-      val engine = new HtmlParser.Engine
-      it.map { p =>
-        val tie = tieOf(p.html)
-        if (p.html != null && p.html.length > BigDocBytes)
-          (p.url, p.warc_ts, tie, null: ExtractedDoc, p)
-        else (p.url, p.warc_ts, tie, parsePage(p, engine), null: Page)
-      }
-    }.toDF("url", "warc_ts", "tie", "doc", "raw")
+    // strategies order by — computed next to the parse (tieOf), so all
+    // strategies pick the same survivor under (url, warc_ts) ties (hashing
+    // text_extracted here would also leave markup-only differences
+    // unresolved: identical text, nondeterministic survivor).
+    val parsed = parseWith(pages) { (p, engine) =>
+      (p.url, p.warc_ts, tieOf(p.html), parsePage(p, engine))
+    }.toDF("url", "warc_ts", "tie", "doc")
     val w = Window.partitionBy($"url").orderBy($"warc_ts".desc, $"tie".desc)
-    scanned.withColumn("rn", row_number().over(w))
+    parsed.withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
-      .select($"doc", $"raw").as[(ExtractedDoc, Page)]
-      .mapPartitions { it =>
-        lazy val engine = new HtmlParser.Engine
-        it.map { case (doc, raw) => if (doc != null) doc else parsePage(raw, engine) }
-      }
+      .select($"doc.*").as[ExtractedDoc]
   }
 
   /** Narrow-shuffle survivor-stats variant of runParseFirst (r6, guide
@@ -394,13 +391,9 @@ object ParseJob {
     * exchange carries one candidate per (map partition, url)). */
   def runParseFirstStats(pages: Dataset[Page]): DataFrame = {
     import pages.sparkSession.implicits._
-    val parsed = saltBySize(pages).mapPartitions { it =>
-      val engine = new HtmlParser.Engine
-      it.map { p =>
-        val tie = tieOf(p.html)
-        val d = parsePage(p, engine)
-        (d.url, d.warc_ts, tie, d.n_bytes, d.parse_ok)
-      }
+    val parsed = parseWith(saltBySize(pages)) { (p, engine) =>
+      val d = parsePage(p, engine)
+      (d.url, d.warc_ts, tieOf(p.html), d.n_bytes, d.parse_ok)
     }.toDF("url", "warc_ts", "tie", "n_bytes", "parse_ok")
     parsed.groupBy("url")
       .agg(max_by(struct($"n_bytes", $"parse_ok"),

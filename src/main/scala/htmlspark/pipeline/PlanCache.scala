@@ -28,6 +28,7 @@ private[pipeline] object PlanCache {
   private val scalars =
     scala.collection.concurrent.TrieMap.empty[(String, String), Long]
 
+  // `f` must be idempotent: under a race getOrElseUpdate can evaluate it twice.
   def getOrComputeLong(spark: SparkSession, key: String)(f: => Long): Long =
     scalars.getOrElseUpdate((sessionId(spark), key), f)
 

@@ -22,15 +22,15 @@ object HtmlParser {
     new Result(tb)
   }
 
-  /** Reusable parser instance for per-partition engine reuse: one Engine
-    * per Spark partition amortizes tokenizer buffers (input work buffer,
-    * pending-text accumulator — both sized to the largest doc seen) and
-    * the builder's stack/AFE backing arrays across every row in the
-    * partition (reference counterpart: per-parser-instance reuse,
+  /** Reusable parser instance: the pipeline keeps one Engine per parse
+    * pool thread (htmlspark.pipeline.ParsePool), which amortizes the
+    * tokenizer buffers (input work buffer, pending-text accumulator — both
+    * sized to the largest doc seen) across every doc that thread parses
+    * (reference counterpart: per-parser-instance reuse,
     * Core/Tokenizer.cs:462, Core/HtmlAttributes.cs:474-492).
     *
     * NOT thread-safe, and each parse's Result/DOM must be consumed before
-    * the next parse call (exactly the per-row shape of the Dataset map). */
+    * the next parse call (exactly the per-row shape of a morsel's loop). */
   final class Engine {
     private val tok = new HtmlTokenizer(null)
     def parse(html: String): Result = {

@@ -125,8 +125,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("parse-first keeps the latest crawl when duplicate crawls mix " +
-       "ordinary and oversized docs (parsed-in-scan and parsed-after-dedup " +
-       "paths)") {
+       "ordinary and oversized docs (oversized docs parsed as morsels of " +
+       "their own)") {
     import spark.implicits._
     // an oversized doc whose text names its crawl, just past the threshold
     def big(tag: String): Array[Byte] = {
